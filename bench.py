@@ -128,6 +128,37 @@ HEADLINE = [
 ]
 
 
+# Consumers of bench.py keep only the last 2000 bytes of stdout; the
+# contract line must fit whole inside that tail, with room for its
+# newline and a margin.
+CONTRACT_LINE_MAX_BYTES = 1900
+
+
+def contract_line(full: dict) -> str:
+    """The LAST stdout line: the output contract — metric, value, unit,
+    sf and the per-query steady medians at centisecond precision (1780
+    bytes for 58 sub-10 s rows). Past CONTRACT_LINE_MAX_BYTES the
+    per-query map is dropped, leaving a totals-only line, and a warning
+    goes to stderr: a line cut by the tail would lose the total too."""
+    line = {
+        "metric": full["metric"],
+        "value": full["value"],
+        "unit": "sec",
+        "queries": {k: round(v, 2) for k, v in full["queries"].items()},
+        "sf": full["sf"],
+    }
+    text = json.dumps(line, separators=(",", ":"))
+    if len(text.encode()) > CONTRACT_LINE_MAX_BYTES:
+        print(
+            f"bench.py: contract line is {len(text.encode())} bytes "
+            f"(> {CONTRACT_LINE_MAX_BYTES}); printing totals only",
+            file=sys.stderr,
+        )
+        del line["queries"]
+        text = json.dumps(line, separators=(",", ":"))
+    return text
+
+
 def _load_gate() -> dict:
     """Refuse to record a comparability artifact on a busy host (r12
     verdict item 2: BENCH_r12.json was recorded at loadavg 3.7-5.4 and
@@ -346,9 +377,8 @@ def main() -> None:
     # (r17 verdict item 2). So: persist the full artifact to disk, print
     # it (head may truncate harmlessly), then a compact totals+conditions
     # line, and END stdout with a minimal contract line — metric, value,
-    # unit, sf AND the per-query steady medians at centisecond precision
-    # (~1.8 KB for 58 rows, measured 1770 bytes: fits whole inside the
-    # 2000-byte tail, which always keeps the LAST line intact).
+    # unit, sf AND the per-query steady medians at centisecond precision,
+    # guarded by contract_line to fit whole inside the 2000-byte tail.
     # Consumers parse the LAST line and get the full queries map back.
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.json"), "w") as fh:
         json.dump(full, fh)
@@ -362,14 +392,7 @@ def main() -> None:
     compact.pop("full_registry_errs")
     print(json.dumps(compact))
     # Minimal LAST line: the original driver contract, queries included.
-    contract_line = {
-        "metric": full["metric"],
-        "value": full["value"],
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "sf": sf,
-    }
-    print(json.dumps(contract_line, separators=(",", ":")))
+    print(contract_line(full))
 
 
 if __name__ == "__main__":

@@ -225,21 +225,34 @@ def widen_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-@functools.lru_cache(maxsize=None)
+# ckpt_if_bounded's source-size gate (see its docstring)
+CKPT_SOURCE_MAX_BYTES = 2 * 1024**3
+
+_SOURCE_BYTES: dict[str, int] = {}
+
+
 def _source_bytes(path: str) -> int:
     """On-disk bytes of one table source (file or directory of parts);
     cached per path for the process lifetime — it gates a plan-shape
-    decision, not a correctness one, so staleness is harmless."""
+    decision, not a correctness one, so staleness is harmless. A 0
+    (missing or unreadable source) is not cached, so a source that
+    appears later is measured then."""
+    if path in _SOURCE_BYTES:
+        return _SOURCE_BYTES[path]
     try:
         if os.path.isfile(path):
-            return os.path.getsize(path)
-        return sum(
-            os.path.getsize(p)
-            for p in glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(p)
-        )
+            n = os.path.getsize(path)
+        else:
+            n = sum(
+                os.path.getsize(p)
+                for p in glob.glob(os.path.join(path, "**", "*"), recursive=True)
+                if os.path.isfile(p)
+            )
     except OSError:
         return 0
+    if n:
+        _SOURCE_BYTES[path] = n
+    return n
 
 
 def ckpt_if_bounded(df: DataFrame, sf_dir: str, table: str = "documents") -> DataFrame:
@@ -254,15 +267,11 @@ def ckpt_if_bounded(df: DataFrame, sf_dir: str, table: str = "documents") -> Dat
     re-planning the explode once per consumer is the cheaper trade and
     the cluster-level answer is a maintained model table, not a
     checkpoint. The gate compares the source parquet's on-disk size
-    against ``SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES`` (default 2 GiB):
-    below it the cut is taken (every local/bench SF qualifies, so the
-    measured sharing wins stand), above it the frame is returned
-    unchanged. Results are identical either way — only the plan shape
-    differs."""
-    limit = int(
-        os.environ.get("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", str(2 * 1024**3))
-    )
-    if _source_bytes(f"{sf_dir}/{table}.parquet") <= limit:
+    against ``CKPT_SOURCE_MAX_BYTES`` (2 GiB): below it the cut is
+    taken (every local/bench SF qualifies, so the measured sharing wins
+    stand), above it the frame is returned unchanged. Results are
+    identical either way — only the plan shape differs."""
+    if _source_bytes(f"{sf_dir}/{table}.parquet") <= CKPT_SOURCE_MAX_BYTES:
         return df.localCheckpoint(eager=False)
     return df
 

@@ -393,7 +393,7 @@ def _fuzzy_pairs_scratch(spark: SparkSession, sf_dir: str) -> DataFrame:
     token = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    path = os.path.join(scratch_dir(f"fuzzpairs_{token}_{os.getpid()}"), "pairs")
+    path = os.path.join(scratch_dir(f"fuzzpairs_{token}"), "pairs")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         part = load_table(spark, "part", sf_dir).select(
             "p_partkey", "p_name", "p_brand"

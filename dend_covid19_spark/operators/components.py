@@ -32,12 +32,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ..catalog import load_table
 from ..functions.dedup_sql import duck_components_ctes
 from ..plans.registry import query
-
-MAX_ROUNDS = 10  # backstop; near-dup graphs converge in 2-4
 
 # Size gate for broadcasting the node-cardinality label table onto the
 # stationary edge partitions — the same Pregel-style optimization (and
@@ -51,7 +50,9 @@ CC_SHUFFLE_PARTS = 32  # edge/label co-partitioning width, big branch
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """(src, dst) undirected edges -> (node, component) with component =
-    min node id reachable. Iterates to exact fixpoint.
+    min node id reachable. Iterates to exact fixpoint, however many
+    rounds the graph's diameter needs. Ids must be integral (TypeError
+    otherwise): the fixpoint test sums them.
 
     r18 round shape (A/B-measured 30 -> 22 scheduled jobs on the
     entity-resolution graph, digest-equal): the symmetric edge table
@@ -71,6 +72,12 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     the label table onto the stationary checkpointed edges; big graphs
     fall back to edges hash-partitioned on the probe key once, labels
     shuffling each round (the only side that must move)."""
+    for field in edges.select(src, dst).schema:
+        if not isinstance(field.dataType, IntegralType):
+            raise TypeError(
+                f"connected_components: id column {field.name!r} is "
+                f"{field.dataType.simpleString()}, not an integral type"
+            )
     sym = edges.selectExpr(f"{src} AS a", f"{dst} AS b").unionByName(
         edges.selectExpr(f"{dst} AS a", f"{src} AS b")
     )
@@ -97,7 +104,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
         if small
         else sym.repartition(CC_SHUFFLE_PARTS, "b").localCheckpoint(eager=False)
     )
-    for _ in range(MAX_ROUNDS):
+    # Terminates: labels are integers that never increase and are
+    # bounded below by the smallest id, so the sum falls every round
+    # until the fixpoint.
+    while True:
         rhs = F.broadcast(labels) if small else labels
         new_labels = (
             sym.join(rhs, sym.b == rhs.node)
@@ -150,7 +160,7 @@ def _dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     token = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    scratch = scratch_dir(f"cclabel_{token}_{os.getpid()}")
+    scratch = scratch_dir(f"cclabel_{token}")
     path = os.path.join(scratch, "labels")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from .dedup import dedup_ngram_jaccard  # deferred: avoids import cycle

@@ -126,7 +126,7 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     token = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    scratch = scratch_dir(f"minhsig_{token}_{os.getpid()}")
+    scratch = scratch_dir(f"minhsig_{token}")
     path = os.path.join(scratch, "sigs")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         # Split sizing follows input BYTES, but minhash is CPU-bound: a
@@ -463,7 +463,7 @@ def _simhash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     token = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    scratch = scratch_dir(f"simhash_{token}_{os.getpid()}")
+    scratch = scratch_dir(f"simhash_{token}")
     path = os.path.join(scratch, "fps")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         docs = widen_scan(load_table(spark, "documents", sf_dir))
@@ -1329,7 +1329,7 @@ def _truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     token = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    scratch = scratch_dir(f"lshtruth_{token}_{os.getpid()}")
+    scratch = scratch_dir(f"lshtruth_{token}")
     path = os.path.join(scratch, "pairs")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         dedup_prefix_filter_join(spark, sf_dir).select(
@@ -1657,7 +1657,7 @@ def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     token = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    scratch = scratch_dir(f"winnowfp_{token}_{os.getpid()}")
+    scratch = scratch_dir(f"winnowfp_{token}")
     path = os.path.join(scratch, "fps")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         docs = widen_scan(load_table(spark, "documents", sf_dir))

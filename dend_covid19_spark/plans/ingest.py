@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import SCHEMAS, load_table
+from ..scratch import scratch_dir
 from ..sources.readers import (
     from_rows,
     read_csv,
@@ -61,16 +62,6 @@ GROUP BY lang
 """
 
 
-def _scratch(name: str) -> str:
-    """Fixed per-query scratch dir: every invocation overwrites the same
-    path (writers run mode('overwrite')), so repeated bench/correctness
-    runs reuse one directory instead of leaking a mkdtemp copy each.
-    pid-stamped so gc_scratch can reap it once this process dies."""
-    from ..scratch import scratch_dir
-
-    return scratch_dir(name)
-
-
 def _digest(df: DataFrame) -> DataFrame:
     return df.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -94,7 +85,7 @@ def ingest_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON encode/decode loop is lossless.
     """
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(_scratch("jsonl"), "docs")
+    path = os.path.join(scratch_dir("jsonl"), "docs")
     write_jsonl(docs, path, compression="gzip")
     back = read_jsonl(spark, os.path.join(path, "*.json.gz"), SCHEMAS["documents"])
     return _digest(back)
@@ -120,7 +111,7 @@ def ingest_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     both the write layout and the pruned read.
     """
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(_scratch("partitioned"), "docs_by_lang")
+    path = os.path.join(scratch_dir("partitioned"), "docs_by_lang")
     write_partitioned(docs, path, ["lang"])
     back = read_partitioned(spark, path, lang=_PRUNE_LANG)
     return _digest(back).select(
@@ -186,7 +177,7 @@ def ingest_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     erasure); the value-hash match certifies the writer's quoting and
     the reader's parsing are mutually lossless for real text data."""
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(_scratch("csv"), "docs_csv")
+    path = os.path.join(scratch_dir("csv"), "docs_csv")
     write_csv(docs, path)
     back = read_csv(spark, path, SCHEMAS["documents"])
     return _digest(back)
@@ -199,7 +190,7 @@ def ingest_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hive/Trino ORC-first lakes, on the same columnar footing (pushdown,
     pruning) as parquet."""
     docs = load_table(spark, "documents", sf_dir)
-    path = os.path.join(_scratch("orc"), "docs_orc")
+    path = os.path.join(scratch_dir("orc"), "docs_orc")
     write_orc(docs, path)
     back = read_orc(spark, path, SCHEMAS["documents"])
     return _digest(back)
@@ -236,7 +227,7 @@ def ingest_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently mis-bind, which is why every reader in this package binds
     by name."""
     docs = load_table(spark, "documents", sf_dir)
-    base = os.path.join(_scratch("evolution"), "docs_gen")
+    base = os.path.join(scratch_dir("evolution"), "docs_gen")
     gen1 = docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text", "n_chars")
     gen2 = docs.where(F.col("doc_id") % 2 == 1).select(
         "doc_id", "text", "n_chars", "lang"
@@ -414,8 +405,8 @@ def streaming_dedup_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash((os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamdedup_{token}")
+    token = abs(hash(os.path.abspath(sf_dir))) % (1 << 32)
+    scratch = scratch_dir(f"streamdedup_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     link = os.path.join(src, "events.parquet")
@@ -503,8 +494,8 @@ def streaming_enrich_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash(("enrich", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamenrich_{token}")
+    token = abs(hash(("enrich", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamenrich_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     link = os.path.join(src, "events.parquet")
@@ -552,21 +543,19 @@ _OVR_RERUN_DAY = "2024-01-06"
 
 
 def _ovr_scratch(sf_dir: str) -> str:
-    """(dataset, pid)-keyed overwrite-store scratch. Dynamic partition
+    """Dataset-keyed overwrite-store scratch. Dynamic partition
     overwrite replaces ONLY partitions present in the incoming frame, so
     a path shared across datasets would carry stale partitions of a
     previously-run sf_dir whenever a window day is absent at the new
-    scale (hash mismatch); shared across processes, two concurrent runs
-    would race (overwrite deletes files a live reader is scanning).
-    Keyed exactly like cdc._snapshot_scratch: sf_dir path + events mtime
-    + pid."""
+    scale (hash mismatch). Keyed exactly like cdc._snapshot_scratch:
+    sf_dir path + events mtime."""
     import hashlib
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    return _scratch(f"ovr_{token}_{os.getpid()}")
+    return scratch_dir(f"ovr_{token}")
 
 
 @query(
@@ -696,8 +685,8 @@ def streaming_session_window_executed(spark: SparkSession, sf_dir: str) -> DataF
     for k in [k for k in _STREAM_SESSION_CACHE if k[0] != key[0]]:
         del _STREAM_SESSION_CACHE[k]
 
-    token = abs(hash(("sesswin", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamsesswin_{token}")
+    token = abs(hash(("sesswin", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamsesswin_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     link = os.path.join(src, "events.parquet")
@@ -792,8 +781,8 @@ def streaming_interval_join_executed(spark: SparkSession, sf_dir: str) -> DataFr
     for k in [k for k in _STREAM_ATTR_CACHE if k[0] != key[0]]:
         del _STREAM_ATTR_CACHE[k]
 
-    token = abs(hash(("attrjoin", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamattr_{token}")
+    token = abs(hash(("attrjoin", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamattr_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     link = os.path.join(src, "events.parquet")
@@ -900,8 +889,8 @@ def streaming_join_state_eviction_executed(spark: SparkSession, sf_dir: str) -> 
         del _STREAM_EVICT_CACHE[k]
         _STREAM_EVICT_METRICS.pop(k, None)
 
-    token = abs(hash(("evictjoin", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamevict_{token}")
+    token = abs(hash(("evictjoin", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamevict_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
 
@@ -1024,8 +1013,8 @@ def streaming_late_drop_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in [k for k in _STREAM_LATE_CACHE if k[0] != key[0]]:
         del _STREAM_LATE_CACHE[k]
 
-    token = abs(hash(("latedrop", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamlate_{token}")
+    token = abs(hash(("latedrop", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamlate_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     f1 = os.path.join(src, "a_events.parquet")
@@ -1166,8 +1155,8 @@ def _drain_mode(
 
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash((mode, os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streammode_{mode}_{token}")
+    token = abs(hash((mode, os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streammode_{mode}_{token}")
     src = _two_batch_src(spark, sf_dir, scratch)
     sink = f"stream_{mode}_sink_{token}"
     conf_key = "spark.sql.shuffle.partitions"
@@ -1324,8 +1313,8 @@ def streaming_stateful_sessionize_executed(
     for k in [k for k in _STREAM_STATEFUL_CACHE if k[0] != key[0]]:
         del _STREAM_STATEFUL_CACHE[k]
 
-    token = abs(hash(("statefulsess", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamstateful_{token}")
+    token = abs(hash(("statefulsess", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamstateful_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     link = os.path.join(src, "events.parquet")
@@ -1489,8 +1478,8 @@ def streaming_restart_resume_executed(spark: SparkSession, sf_dir: str) -> DataF
 
     from ..streaming.daily import read_events_stream
 
-    token = abs(hash(("resume", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamresume_{token}")
+    token = abs(hash(("resume", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamresume_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     sink = os.path.join(scratch, "sink")
@@ -1589,8 +1578,8 @@ def streaming_upsert_sink_executed(spark: SparkSession, sf_dir: str) -> DataFram
         run_conditional_upsert_available_now,
     )
 
-    token = abs(hash(("upsert", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamupsert_{token}")
+    token = abs(hash(("upsert", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamupsert_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     store = os.path.join(scratch, "store")
@@ -1689,8 +1678,8 @@ def streaming_drift_monitor_executed(spark: SparkSession, sf_dir: str) -> DataFr
     from ..streaming.daily import run_counts_merge_available_now
     from .timeseries import drift_tv_from_daily
 
-    token = abs(hash(("driftmon", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamdrift_{token}")
+    token = abs(hash(("driftmon", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamdrift_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     store = os.path.join(scratch, "store")
@@ -1804,8 +1793,8 @@ def streaming_funnel_executed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import run_funnel_available_now
     from .timeseries import FUNNEL_STAGES, FUNNEL_WINDOW_MIN
 
-    token = abs(hash(("funnel", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamfunnel_{token}")
+    token = abs(hash(("funnel", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamfunnel_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
 
@@ -1920,8 +1909,8 @@ def streaming_compaction_sink_executed(spark: SparkSession, sf_dir: str) -> Data
 
     from ..streaming.daily import run_partitioned_sink_with_compaction
 
-    token = abs(hash(("compactsink", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"streamcompact_{token}")
+    token = abs(hash(("compactsink", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamcompact_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     out = os.path.join(scratch, "sink")
@@ -2066,8 +2055,8 @@ def snapshot_time_travel_compacted(spark: SparkSession, sf_dir: str) -> DataFram
         run_conditional_upsert_available_now,
     )
 
-    token = abs(hash(("snaptt", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"snaptt_{token}")
+    token = abs(hash(("snaptt", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"snaptt_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     store = os.path.join(scratch, "store")
@@ -2197,8 +2186,8 @@ def lakehouse_manifest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table,
     )
 
-    token = abs(hash(("lakehouse", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"lakehouse_{token}")
+    token = abs(hash(("lakehouse", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"lakehouse_{token}")
     root = os.path.join(scratch, "table")
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -2279,16 +2268,16 @@ def _compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
     import hashlib
 
     from ..operators.maintenance import compact_partitions, partition_file_stats
-    from ..scratch import materialize_once, scratch_dir
+    from ..scratch import materialize_once
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(
         f"compactev{_COMPACT_DEMO_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{_COMPACT_FRAG_FILES}:{_COMPACT_FRAG_DOM}:{_COMPACT_MAX_FILES}".encode()
     ).hexdigest()[:12]
-    # pid-keyed per-process build (r18 verdict item 3) — each process
-    # builds its own fixture; gc_scratch reaps it when the owner exits.
-    parent = scratch_dir(f"compactev_{token}_{os.getpid()}")
+    # per-process build (r18 verdict item 3): each process builds its
+    # own fixture under its scratch root.
+    parent = scratch_dir(f"compactev_{token}")
     path = os.path.join(parent, "data")
 
     def _write(tmp: str) -> None:
@@ -2353,16 +2342,16 @@ def _manifest_compacted_events_root(spark: SparkSession, sf_dir: str) -> str:
         files_for_values,
         write_manifest_table,
     )
-    from ..scratch import materialize_once, scratch_dir
+    from ..scratch import materialize_once
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(
         f"mcompactev{_COMPACT_DEMO_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{_COMPACT_FRAG_FILES}:{_COMPACT_FRAG_DOM}".encode()
     ).hexdigest()[:12]
-    # pid-keyed per-process build (r18 verdict item 3) — each process
-    # builds its own fixture; gc_scratch reaps it when the owner exits.
-    parent = scratch_dir(f"mcompactev_{token}_{os.getpid()}")
+    # per-process build (r18 verdict item 3): each process builds its
+    # own fixture under its scratch root.
+    parent = scratch_dir(f"mcompactev_{token}")
     path = os.path.join(parent, "table")
 
     def _write(tmp: str) -> None:
@@ -2506,8 +2495,8 @@ def compaction_incremental_events(spark: SparkSession, sf_dir: str) -> DataFrame
 # (operators/lakehouse.py), each proven at the library level in r15
 # (tests/test_lakehouse.py) and put under the cross-engine value hash
 # here. They share one build-and-cache discipline with the other
-# side-effecting rows: the table builds once per (process, sf) into a
-# pid-stamped scratch, every invocation re-runs the metadata asserts
+# side-effecting rows: the table builds once per (process, sf) into
+# process scratch, every invocation re-runs the metadata asserts
 # (driver-side, cheap), and the digest hashes against a DuckDB oracle
 # over the ORIGINAL events parquet.
 
@@ -2572,8 +2561,8 @@ def lakehouse_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table,
     )
 
-    token = abs(hash(("lhprune", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"lhprune_{token}")
+    token = abs(hash(("lhprune", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"lhprune_{token}")
     root = os.path.join(scratch, "table")
 
     if not os.path.exists(os.path.join(root, "_manifests", "m1.json")):
@@ -2675,8 +2664,8 @@ def lakehouse_concurrent_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table,
     )
 
-    token = abs(hash(("lhrace", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"lhrace_{token}")
+    token = abs(hash(("lhrace", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"lhrace_{token}")
     root = os.path.join(scratch, "table")
 
     if not os.path.exists(os.path.join(root, "_manifests", "m1.json")):
@@ -2799,8 +2788,8 @@ def lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_manifest_table,
     )
 
-    token = abs(hash(("lhevolve", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"lhevolve_{token}")
+    token = abs(hash(("lhevolve", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"lhevolve_{token}")
     root = os.path.join(scratch, "table")
 
     if not os.path.exists(os.path.join(root, "_manifests", "m1.json")):
@@ -2908,10 +2897,8 @@ def streaming_compaction_restart_executed(spark: SparkSession, sf_dir: str) -> D
 
     from ..streaming.daily import run_partitioned_sink_with_compaction
 
-    token = abs(hash(("compactrestart", os.path.abspath(sf_dir), os.getpid()))) % (
-        1 << 32
-    )
-    scratch = _scratch(f"streamcres_{token}")
+    token = abs(hash(("compactrestart", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"streamcres_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     out = os.path.join(scratch, "sink")
@@ -3075,10 +3062,8 @@ def streaming_manifest_sink_executed(spark: SparkSession, sf_dir: str) -> DataFr
     )
     from ..streaming.daily import run_manifest_sink_with_compaction
 
-    token = abs(hash(("manifestsink", os.path.abspath(sf_dir), os.getpid()))) % (
-        1 << 32
-    )
-    scratch = _scratch(f"manifestsink_{token}")
+    token = abs(hash(("manifestsink", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"manifestsink_{token}")
     src = os.path.join(scratch, "src")
     os.makedirs(src, exist_ok=True)
     root = os.path.join(scratch, "table")
@@ -3243,8 +3228,8 @@ def lakehouse_asof_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_manifest_table,
     )
 
-    token = abs(hash(("asofhist", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"asofhist_{token}")
+    token = abs(hash(("asofhist", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"asofhist_{token}")
     root = os.path.join(scratch, "table")
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -3385,8 +3370,8 @@ def lakehouse_partition_exact_scan(spark: SparkSession, sf_dir: str) -> DataFram
         write_manifest_table,
     )
 
-    token = abs(hash(("pexact", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"pexact_{token}")
+    token = abs(hash(("pexact", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"pexact_{token}")
     root = os.path.join(scratch, "table")
     audit_path = os.path.join(scratch, "_build_audit.json")
 
@@ -3590,8 +3575,8 @@ def lakehouse_spec_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         write_manifest_table,
     )
 
-    token = abs(hash(("specevo", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"specevo_{token}")
+    token = abs(hash(("specevo", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"specevo_{token}")
     root = os.path.join(scratch, "table")
     audit_path = os.path.join(scratch, "_build_audit.json")
 
@@ -3793,8 +3778,8 @@ def lakehouse_transform_migration_scan(spark: SparkSession, sf_dir: str) -> Data
         write_manifest_table,
     )
 
-    token = abs(hash(("tmig", os.path.abspath(sf_dir), os.getpid()))) % (1 << 32)
-    scratch = _scratch(f"tmig_{token}")
+    token = abs(hash(("tmig", os.path.abspath(sf_dir)))) % (1 << 32)
+    scratch = scratch_dir(f"tmig_{token}")
     root = os.path.join(scratch, "table")
     audit_path = os.path.join(scratch, "_build_audit.json")
 

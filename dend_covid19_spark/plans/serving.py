@@ -9,12 +9,12 @@ INSERT shapes), airflow/dags/reset_tables.py:20-38 (drop+create),
 airflow/dags/tweets_and_market.py:15-17,97-104 (the 3-day backfill
 window driving both sides per execution date).
 
-The managed database is pinned to a pid-scoped /tmp LOCATION so the
-query is independent of the driver's cwd (the default warehouse dir is
-cwd-relative) and concurrent processes can't race each other's
-DROP/INSERT. ETL executes once per (session, sf_dir) and the digest
-plan is cached — identical to the streaming-drain discipline in
-plans/ingest.py: re-invocations (the driver times each query several
+The managed database is pinned to a LOCATION under the process scratch
+root so the query is independent of the driver's cwd (the default
+warehouse dir is cwd-relative) and concurrent processes can't race
+each other's DROP/INSERT. ETL executes once per (session, sf_dir) and
+the digest plan is cached — identical to the streaming-drain discipline
+in plans/ingest.py: re-invocations (the driver times each query several
 times) re-read the loaded tables instead of replaying the backfill.
 """
 
@@ -25,7 +25,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline import backfill
 from ..scratch import scratch_dir
 from .annotate import _SENTIMENT_CTE
 from .registry import query
@@ -107,7 +106,11 @@ def serving_tables_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in [k for k in _SERVING_CACHE if k != cache_key]:
         del _SERVING_CACHE[k]
 
-    loc = scratch_dir(f"servingdb_{os.getpid()}")
+    # deferred: pipeline's imports reach the plans package (through
+    # operators), so a top-level import here cycles when pipeline loads first
+    from ..pipeline import backfill
+
+    loc = scratch_dir("servingdb")
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {_DB} LOCATION '{loc}'")
     backfill(
         spark,
@@ -248,7 +251,7 @@ def jdbc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    url = derby_url(os.path.join(scratch_dir(f"derby_{os.getpid()}"), "db"))
+    url = derby_url(os.path.join(scratch_dir("derby"), "db"))
     write_jdbc_staged(spark, agg, url, "daily_events")
     bounds = agg.agg(F.min("cnt"), F.max("cnt")).first()
     if bounds[0] is None:

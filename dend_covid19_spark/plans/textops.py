@@ -901,7 +901,7 @@ def _gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     token = hashlib.md5(
         f"{os.path.abspath(sf_dir)}:{mtime}".encode()
     ).hexdigest()[:12]
-    scratch = scratch_dir(f"grampos_{token}_{os.getpid()}")
+    scratch = scratch_dir(f"grampos_{token}")
     path = os.path.join(scratch, "grams")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from ..catalog import widen_scan

@@ -1,88 +1,53 @@
-"""Process-scoped /tmp scratch management with liveness-checked GC.
+"""Per-process /tmp scratch: one root per process, reaped when it dies.
 
 Side-effecting queries (ingest round-trips, streaming drains, CDC
-snapshot stores, bucketed-table demos) materialize intermediate data
-under ``$TMPDIR/spark_graft_ingest/<name>``. Names are either fixed
-per query (overwritten every run — no growth) or token-suffixed per
-(dataset, pid) — and THOSE accumulate a few MB per process when many
-driver rounds share a machine (SURVEY.md §8 queue item c).
+snapshot stores, the serving Derby db, derived indexes) materialize
+intermediate data under ``$TMPDIR/spark_graft_ingest/<pid>/<name>``.
+The ``<pid>`` directory is the only place the process is named: every
+name below it is private to this process, so no two processes ever
+share a scratch directory and nothing has to record who uses it.
 
-``scratch_dir`` stamps every directory it creates with an ``owner.pid``
-marker; ``gc_scratch`` removes directories whose owning process is no
-longer alive (or, for legacy unmarked dirs, whose mtime is older than a
-safety horizon). The session factory calls ``gc_scratch`` once per
-process so cleanup needs no operator action.
+``gc_scratch`` removes the ``<pid>`` roots of dead processes. The
+session factory calls it once per process so cleanup needs no
+operator action.
 
 At 100 TB the same discipline applies to object-store scratch prefixes:
-tag transient prefixes with the job/run id and reap tags whose run is
-finished — the pid marker here is the single-machine projection of that.
+put transient data under a prefix named by the job/run id and reap
+prefixes whose run is finished — the pid root here is the
+single-machine projection of that.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import tempfile
+import threading
 
 SCRATCH_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_ingest")
 
-_PID_MARKER = "owner.pid"
-# dirs created before the marker existed encode the owner as a trailing
-# _<pid> name segment — but ONLY for the known legacy families (cdc
-# snap_*, scale bucketed_*, serving servingdb_*). Other token-suffixed
-# names (streamdedup_<hash>, streamenrich_<hash>) end in a 32-bit hash
-# that must NOT be misread as a pid: a hash that matches no live pid
-# would make GC reap a directory a live pre-marker process still uses.
-_TRAILING_PID = re.compile(r"^(?:snap|bucketed|servingdb)_.*?(\d+)$")
+_lock = threading.Lock()
+_claimed: set[str] = set()  # process roots already wiped by this process
 
-# unmarked, un-suffixed dirs (fixed-name ingest scratch) are only
-# reaped when untouched for this long — they are overwrite-in-place by
-# design, so age implies the writing process family is gone
-_STALE_AGE_SEC = 6 * 3600
+
+def process_root(root: str = SCRATCH_ROOT) -> str:
+    """``root/<pid>``, this process's scratch root. The first call for a
+    root removes any leftover directory of that name: a live process
+    never leaves one behind for this pid, so it can only come from a
+    dead process whose pid was reused. Keyed by path, so a forked child
+    (new pid) claims its own root."""
+    path = os.path.join(root, str(os.getpid()))
+    with _lock:
+        if path not in _claimed:
+            shutil.rmtree(path, ignore_errors=True)
+            _claimed.add(path)
+    return path
 
 
 def scratch_dir(name: str, root: str = SCRATCH_ROOT) -> str:
-    """Create (idempotently) ``root/name`` and stamp it with this
-    process's pid so gc_scratch can prove liveness later. The marker
-    records one pid per line: re-entering a shared fixed-name dir ADDS
-    this process as a co-owner (keeping still-live prior owners) rather
-    than overwriting them — otherwise B re-stamping a dir A still uses,
-    then dying, would let a third process reap it out from under A.
-    The compacting rewrite (dead pids dropped so the file stays
-    bounded) is guarded by an flock on the marker: two processes
-    entering the same dir concurrently serialize their
-    read-modify-write instead of each overwriting the other's pid —
-    the lost-owner race the co-owner list exists to prevent."""
-    path = os.path.join(root, name)
+    """Create (idempotently) ``root/<pid>/name`` and return its path."""
+    path = os.path.join(process_root(root), name)
     os.makedirs(path, exist_ok=True)
-    me = os.getpid()
-    try:
-        import fcntl
-
-        marker = os.path.join(path, _PID_MARKER)
-        # open read-write WITHOUT truncating: truncation must happen
-        # only after the lock is held, or a concurrent reader/writer
-        # sees an empty owner list mid-update
-        fd = os.open(marker, os.O_RDWR | os.O_CREAT, 0o644)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            raw = os.read(fd, 1 << 16).decode(errors="replace")
-            prior: list[int] = []
-            for line in raw.split():
-                try:
-                    prior.append(int(line))
-                except ValueError:
-                    continue
-            owners = [p for p in prior if p != me and _pid_alive(p)]
-            payload = "\n".join(str(p) for p in [*owners, me]).encode()
-            os.lseek(fd, 0, os.SEEK_SET)
-            os.truncate(fd, 0)
-            os.write(fd, payload)
-        finally:
-            os.close(fd)  # releases the flock
-    except OSError:
-        pass  # read-only scratch is the caller's problem, not GC's
     return path
 
 
@@ -103,19 +68,9 @@ def materialize_once(path: str, write_fn) -> str:
     absent and rebuilt: every writer publishes via rename, and a fully
     renamed Spark write dir always carries ``_SUCCESS`` — so a
     marker-less dir can only be debris from a pre-r13 in-place writer
-    killed mid-write, exactly what this helper exists to never trust.
-
-    Every cache HIT touches the published dir and its parent (r13
-    advice): the unmarked cross-process artifacts (ivfcell_*,
-    codebook_*, deconsh_*) are reaped by gc_scratch's mtime age gate,
-    and reads never bump mtime on their own — without the touch, a
-    newly started process could reap an index another live process is
-    actively probing mid-scan (FileNotFound task failures, or a
-    silently partial scan in a narrow listing race). With it, the age
-    gate measures time since last USE, not since publish."""
+    killed mid-write, exactly what this helper exists to never trust."""
     if os.path.isdir(path):
         if os.path.exists(os.path.join(path, "_SUCCESS")):
-            _touch_live(path)
             return path
         shutil.rmtree(path, ignore_errors=True)
     tmp = f"{path}.tmp.{os.getpid()}.{os.urandom(4).hex()}"
@@ -136,21 +91,6 @@ def materialize_once(path: str, write_fn) -> str:
     return path
 
 
-def _touch_live(path: str) -> None:
-    """Best-effort mtime bump of ``path`` and its SCRATCH_ROOT-level
-    ancestor so actively-used unmarked artifacts stay inside
-    gc_scratch's age gate (the gate checks the TOP-LEVEL entry's mtime,
-    one directory below the root)."""
-    import time as _time
-
-    now = _time.time()
-    for p in (path, os.path.dirname(path)):
-        try:
-            os.utime(p, (now, now))
-        except OSError:
-            pass
-
-
 def _pid_alive(pid: int) -> bool:
     try:
         os.kill(pid, 0)
@@ -163,68 +103,25 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def _owner_pids(path: str) -> list[int] | None:
-    """All recorded owner pids (one per line), else the legacy
-    trailing-pid name inference, else None (ownerless — age-gated)."""
-    marker = os.path.join(path, _PID_MARKER)
-    try:
-        # Shared flock pairs with the writer's exclusive flock in
-        # scratch_dir: without it a reader could observe the marker
-        # mid-rewrite (truncated, owner list empty) and fall through to
-        # the age gate while a live owner exists (ADVICE r10).
-        with open(marker) as fh:
-            try:
-                import fcntl
-
-                fcntl.flock(fh.fileno(), fcntl.LOCK_SH)
-            except OSError:
-                pass  # unlockable fs: keep the age-gate fallback
-            pids = [int(line) for line in fh.read().split() if line.strip()]
-        if pids:
-            return pids
-    except (OSError, ValueError):
-        pass
-    m = _TRAILING_PID.match(os.path.basename(path))
-    return [int(m.group(1))] if m else None
-
-
-def gc_scratch(
-    root: str = SCRATCH_ROOT,
-    stale_age_sec: float = _STALE_AGE_SEC,
-    now: float | None = None,
-) -> list[str]:
-    """Remove scratch subdirectories whose owning process is dead; for
-    ownerless dirs fall back to an mtime age check. Never touches the
-    current process's dirs. Returns the paths removed (for tests/ops
-    logging). Best-effort by design: a dir that fails to delete (e.g.
-    a racing writer re-creating files) is skipped, not raised."""
+def gc_scratch(root: str = SCRATCH_ROOT) -> list[str]:
+    """Remove every ``root/<pid>`` directory whose process is dead, never
+    this process's own. Non-numeric entries (written by older code) are
+    left alone. Returns the paths removed (for tests/ops logging).
+    Best-effort by design: a dir that fails to delete is skipped, not
+    raised."""
     removed: list[str] = []
     try:
         entries = os.listdir(root)
     except OSError:
         return removed
-    import time as _time
-
-    now = _time.time() if now is None else now
     me = os.getpid()
     for entry in entries:
+        if not entry.isdecimal() or int(entry) == me or _pid_alive(int(entry)):
+            continue
         path = os.path.join(root, entry)
-        if not os.path.isdir(path) or os.path.islink(path):
-            continue
-        pids = _owner_pids(path)
-        if pids and me in pids:
-            continue
-        if pids:
-            dead = not any(_pid_alive(p) for p in pids)
-        else:
-            try:
-                dead = (now - os.path.getmtime(path)) > stale_age_sec
-            except OSError:
-                dead = False
-        if dead:
-            try:
-                shutil.rmtree(path)
-                removed.append(path)
-            except OSError:
-                pass
+        try:
+            shutil.rmtree(path)
+            removed.append(path)
+        except OSError:
+            pass
     return removed

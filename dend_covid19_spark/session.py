@@ -69,8 +69,8 @@ def get_spark(
     )
     # Reap dead processes' /tmp scratch before this one starts writing
     # its own (SURVEY.md §8 queue item c): side-effecting queries leave
-    # pid-stamped dirs under $TMPDIR/spark_graft_ingest; rounds sharing
-    # a machine would otherwise accumulate a few MB per driver pid.
+    # a $TMPDIR/spark_graft_ingest/<pid> root; rounds sharing a machine
+    # would otherwise accumulate a few MB per driver pid.
     try:
         from .scratch import gc_scratch
 

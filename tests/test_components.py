@@ -151,3 +151,23 @@ def test_cc_shuffle_branch_matches_broadcast_branch(spark, monkeypatch):
         for r in C.connected_components(pairs, "doc_a", "doc_b").collect()
     }
     assert got == want and got
+
+
+def test_cc_long_path_converges_to_one_component(spark):
+    """A 40-node path needs ~40 propagation rounds: the loop must run to
+    the fixpoint, not stop at a round cap with the path split up."""
+    from dend_covid19_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(39)], "src long, dst long")
+    got = {r.node: r.component for r in connected_components(edges).collect()}
+    assert got == {i: 0 for i in range(40)}
+
+
+def test_cc_rejects_non_integral_ids(spark):
+    import pytest
+
+    from dend_covid19_spark.operators.components import connected_components
+
+    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
+    with pytest.raises(TypeError, match="integral"):
+        connected_components(edges)

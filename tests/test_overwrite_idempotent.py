@@ -43,10 +43,13 @@ def test_sibling_partitions_survive(spark):
 def test_scratch_keyed_by_dataset_and_pid(tmp_path):
     """The overwrite store must never be shared across datasets or
     processes: a different sf_dir (or the same dir with regenerated
-    files) and a different pid must each map to a distinct path."""
+    files) maps to a distinct path, and every path lies under this
+    process's own scratch root."""
+    from dend_covid19_spark.scratch import process_root
+
     a = _ovr_scratch(SF_DIR)
-    assert a == _ovr_scratch(SF_DIR)  # deterministic for (dataset, pid)
-    assert str(os.getpid()) in os.path.basename(a)
+    assert a == _ovr_scratch(SF_DIR)  # deterministic per dataset
+    assert os.path.dirname(a) == process_root()
     import shutil
 
     other = tmp_path / "sfX"

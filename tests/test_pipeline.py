@@ -146,3 +146,21 @@ def test_observe_metrics_free_telemetry(spark):
     observed2.write.format("noop").mode("overwrite").save()
     with pytest.raises(DataQualityError, match="n_rows"):
         expect_observed(obs2, lambda m: m["n_rows"] > 10**6, name="volume-floor")
+
+
+def test_pipeline_imports_first():
+    """Importing ``pipeline`` before the plans package must not hit the
+    pipeline -> operators -> plans -> serving -> pipeline cycle."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", "import dend_covid19_spark.pipeline"],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr

@@ -664,12 +664,19 @@ def test_corpus_stream_ckpt_gated_on_scale(spark, name, monkeypatch):
     sharing regression in results), and the default gate keeps the cut."""
     import dend_covid19_spark.catalog as cat
 
-    monkeypatch.setenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES", "0")
-    cat._source_bytes.cache_clear()
-    try:
-        plan = formatted_plan(spark, name)
-    finally:
-        monkeypatch.delenv("SPARK_GRAFT_CKPT_SOURCE_MAX_BYTES")
-        cat._source_bytes.cache_clear()
+    monkeypatch.setattr(cat, "CKPT_SOURCE_MAX_BYTES", 0)
+    plan = formatted_plan(spark, name)
     gen_nodes = len(re.findall(r"^\(\d+\) Generate", plan, re.M))
     assert gen_nodes >= 2, f"gate ignored: stream still checkpointed\n{plan}"
+
+
+def test_source_bytes_not_cached_while_missing(tmp_path):
+    """A source measured before it exists must be measured again once it
+    appears, not gated as 0 bytes for the rest of the process."""
+    import dend_covid19_spark.catalog as cat
+
+    path = str(tmp_path / "t.parquet")
+    assert cat._source_bytes(path) == 0
+    with open(path, "wb") as fh:
+        fh.write(b"x" * 10)
+    assert cat._source_bytes(path) == 10

@@ -1,5 +1,5 @@
 """Round-14 surfaces: the split exact+sketch hourly agg, the
-materialized decon bloom words, and the cross-process decon scratch."""
+materialized decon bloom words, and the per-process decon scratch."""
 
 from __future__ import annotations
 
@@ -13,8 +13,8 @@ from conftest import SF_DIR
 def test_decon_bloom_words_cache_is_value_identical(spark):
     """The materialized packed bloom words must equal a fresh
     derivation from the bench slice exactly — xxhash64 positions and
-    bit_or packing are integer arithmetic, so cross-process reuse is
-    bit-identical by construction, and a stale/wrong artifact would
+    bit_or packing are integer arithmetic, so reuse is bit-identical by
+    construction, and a stale/wrong artifact would
     change the gate's pruning (never its output, bloom = no false
     negatives — which is why this is pinned at the words level, where
     a regression is visible)."""
@@ -34,19 +34,20 @@ def test_decon_bloom_words_cache_is_value_identical(spark):
 
 def test_decon_scratch_is_process_keyed(spark):
     """r18 (verdict item 3): the decon contamination index scratch must
-    be PER-PROCESS — pid in the dir name and an owner.pid marker — so a
-    bench process can never read a shingle table some earlier process
-    built (its timings must include the build) and gc_scratch reaps the
-    dir at owner exit instead of age-gating it."""
+    be PER-PROCESS — under this process's scratch root — so a bench
+    process can never read a shingle table some earlier process built
+    (its timings must include the build) and gc_scratch reaps it with
+    the root once the process exits."""
     from dend_covid19_spark.plans.llm_pipeline import (
         _decon_scratch_parent,
         _decon_shingle_hashes,
     )
+    from dend_covid19_spark.scratch import process_root
 
     _decon_shingle_hashes(spark, SF_DIR)  # ensure built
     parent = _decon_scratch_parent(SF_DIR)
-    assert re.search(rf"_{os.getpid()}$", parent)
-    assert os.path.exists(os.path.join(parent, "owner.pid"))
+    assert os.path.dirname(parent) == process_root()
+    assert os.path.basename(process_root()) == str(os.getpid())
     assert os.path.exists(os.path.join(parent, "gh", "_SUCCESS"))
 
 
@@ -108,7 +109,9 @@ def test_funnel_staged_files_have_strictly_increasing_mtimes(spark):
     streaming_funnel_executed(spark, SF_DIR)  # stages + drains (cached)
     import glob
 
-    roots = glob.glob("/tmp/spark_graft_ingest/streamfunnel_*/src")
+    from dend_covid19_spark.scratch import process_root
+
+    roots = glob.glob(os.path.join(process_root(), "streamfunnel_*", "src"))
     assert roots, "funnel staging dir not found"
     src = max(roots, key=os.path.getmtime)
     files = sorted(glob.glob(os.path.join(src, "p*.parquet")))

@@ -1,13 +1,12 @@
-"""Liveness-checked /tmp scratch GC (SURVEY.md §8 queue item c):
-pid-marked dirs are reaped exactly when their owner is dead; live and
-current-process dirs survive; unmarked dirs fall back to an age check.
-No Spark needed — pure filesystem semantics."""
+"""Per-process /tmp scratch (SURVEY.md §8 queue item c): every scratch
+dir lives under ``root/<pid>``; gc reaps exactly the roots of dead
+processes and leaves live, own and non-pid entries alone. No Spark
+needed — pure filesystem semantics."""
 
 from __future__ import annotations
 
 import os
 import subprocess
-import time
 
 from dend_covid19_spark.scratch import gc_scratch, scratch_dir
 
@@ -20,60 +19,34 @@ def _dead_pid() -> int:
 
 
 def test_scratch_dir_stamps_owner(tmp_path):
+    """The owner stamp is the directory itself: every scratch dir lands
+    under ``root/<pid>``."""
     root = str(tmp_path)
     d = scratch_dir("mine", root=root)
     assert os.path.isdir(d)
-    with open(os.path.join(d, "owner.pid")) as fh:
-        assert int(fh.read()) == os.getpid()
+    assert d == os.path.join(root, str(os.getpid()), "mine")
 
 
 def test_gc_spares_live_owner_and_self(tmp_path):
     root = str(tmp_path)
     mine = scratch_dir("mine", root=root)
-    # dir stamped by a demonstrably live foreign process (pid 1)
-    other = os.path.join(root, "other")
+    other = os.path.join(root, "1", "x")  # pid 1 (init) is alive
     os.makedirs(other)
-    with open(os.path.join(other, "owner.pid"), "w") as fh:
-        fh.write("1")
-    removed = gc_scratch(root=root)
-    assert removed == []
+    assert gc_scratch(root=root) == []
     assert os.path.isdir(mine) and os.path.isdir(other)
 
 
 def test_gc_reaps_dead_owner_marker(tmp_path):
+    """A root named by a dead pid is reaped; live and own roots stay."""
     root = str(tmp_path)
-    dead = os.path.join(root, "deadguy")
-    os.makedirs(dead)
-    with open(os.path.join(dead, "owner.pid"), "w") as fh:
-        fh.write(str(_dead_pid()))
-    removed = gc_scratch(root=root)
-    assert removed == [dead]
-    assert not os.path.exists(dead)
-
-
-def test_gc_reaps_dead_owner_name_suffix(tmp_path):
-    """Legacy dirs (pre-marker) encode the owner as a trailing _<pid>
-    name segment — cdc snap_*, scale bucketed_*."""
-    root = str(tmp_path)
-    dead = os.path.join(root, f"snap_abc123_{_dead_pid()}")
-    os.makedirs(dead)
-    live = os.path.join(root, "bucketed_def456_1")  # pid 1 is alive
+    mine = scratch_dir("mine", root=root)
+    live = os.path.join(root, "1")
     os.makedirs(live)
-    removed = gc_scratch(root=root)
-    assert removed == [dead]
-    assert os.path.isdir(live)
-
-
-def test_gc_unmarked_dirs_age_gated(tmp_path):
-    root = str(tmp_path)
-    anon = os.path.join(root, "jsonl")
-    os.makedirs(anon)
-    # young: kept regardless of ownership ambiguity
-    assert gc_scratch(root=root, stale_age_sec=3600) == []
-    assert os.path.isdir(anon)
-    # old: reaped (simulate age by shifting "now" forward)
-    assert gc_scratch(root=root, stale_age_sec=3600, now=time.time() + 7200) == [anon]
-    assert not os.path.exists(anon)
+    dead = os.path.join(root, str(_dead_pid()))
+    os.makedirs(os.path.join(dead, "snap_abc"))
+    assert gc_scratch(root=root) == [dead]
+    assert not os.path.exists(dead)
+    assert os.path.isdir(mine) and os.path.isdir(live)
 
 
 def test_gc_missing_root_is_noop(tmp_path):
@@ -81,39 +54,30 @@ def test_gc_missing_root_is_noop(tmp_path):
 
 
 def test_hash_token_suffix_not_treated_as_pid(tmp_path):
-    """streamdedup_<token>/streamenrich_<token> end in a 32-bit hash, not
-    a pid; the legacy trailing-digits inference must not apply (it would
-    reap a live pre-marker process's dir the moment the hash matched no
-    live pid). Ownerless -> age-gated: young dirs survive."""
+    """Only an all-digit entry names a process. Entries written by older
+    code (``streamdedup_<hash>``, fixed names like ``jsonl``) are left
+    alone, even when their digits match no live pid."""
     root = str(tmp_path)
-    young = os.path.join(root, f"streamdedup_{_dead_pid()}")
-    os.makedirs(young)
-    assert gc_scratch(root=root, stale_age_sec=3600) == []
-    assert os.path.isdir(young)
-    # and the age gate still applies once genuinely stale
-    assert gc_scratch(root=root, stale_age_sec=3600, now=time.time() + 7200) == [young]
+    legacy = [os.path.join(root, n) for n in (f"streamdedup_{_dead_pid()}", "jsonl")]
+    for d in legacy:
+        os.makedirs(d)
+    assert gc_scratch(root=root) == []
+    assert all(os.path.isdir(d) for d in legacy)
 
 
-def test_shared_dir_keeps_live_coowners(tmp_path):
-    """Re-stamping a shared fixed-name dir records a co-owner list, not a
-    hostile takeover: a dir co-owned by a live foreign pid and a dead one
-    survives; it is reaped only when every recorded owner is dead."""
+def test_leftover_own_root_wiped_on_first_use(tmp_path):
+    """A ``root/<pid>`` that exists before this process first uses the
+    root belongs to a dead process whose pid was reused: the first
+    scratch_dir call clears it; later calls keep what this process
+    wrote."""
     root = str(tmp_path)
-    shared = os.path.join(root, "shared")
-    os.makedirs(shared)
-    with open(os.path.join(shared, "owner.pid"), "w") as fh:
-        fh.write("1")  # live foreign owner (init)
-    scratch_dir("shared", root=root)  # we adopt as co-owner
-    with open(os.path.join(shared, "owner.pid")) as fh:
-        pids = [int(x) for x in fh.read().split()]
-    assert pids == [1, os.getpid()]
-    # now simulate: our process "dies" by rewriting marker to (1, dead)
-    with open(os.path.join(shared, "owner.pid"), "w") as fh:
-        fh.write(f"1\n{_dead_pid()}")
-    assert gc_scratch(root=root) == []  # pid 1 still alive -> kept
-    with open(os.path.join(shared, "owner.pid"), "w") as fh:
-        fh.write(f"{_dead_pid()}\n{_dead_pid()}")
-    assert gc_scratch(root=root) == [shared]  # all owners dead -> reaped
+    stale = os.path.join(root, str(os.getpid()), "stale")
+    os.makedirs(stale)
+    d = scratch_dir("mine", root=root)
+    assert not os.path.exists(stale)
+    open(os.path.join(d, "f"), "w").close()
+    scratch_dir("other", root=root)
+    assert os.path.exists(os.path.join(d, "f"))
 
 
 def test_materialize_once_atomic_and_rebuilds_partials(tmp_path):
@@ -166,34 +130,6 @@ def test_materialize_once_atomic_and_rebuilds_partials(tmp_path):
     assert os.path.exists(os.path.join(target, "_SUCCESS"))
     leftovers = [p for p in os.listdir(tmp_path) if ".tmp." in p]
     assert leftovers == []
-
-
-def test_materialize_once_touches_on_hit(tmp_path):
-    """r13 advice: unmarked age-gated artifacts (ivfcell_*, codebook_*,
-    deconsh_*) must stay inside gc_scratch's 6-hour age gate while
-    actively USED — reads don't bump mtime on their own, so every
-    cache hit touches the published dir and its top-level parent."""
-    import os
-
-    from dend_covid19_spark.scratch import materialize_once
-
-    parent = tmp_path / "ivfcell_abc"
-    parent.mkdir()
-    target = str(parent / "index")
-
-    def write(tmp):
-        os.makedirs(tmp)
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
-
-    materialize_once(target, write)
-    old = time.time() - 10 * 3600  # way past the 6-hour gate
-    os.utime(target, (old, old))
-    os.utime(parent, (old, old))
-    materialize_once(target, write)  # cache hit
-    assert os.path.getmtime(target) > old + 3600
-    assert os.path.getmtime(parent) > old + 3600
-    # and the gate now spares the freshly-used artifact
-    assert gc_scratch(root=str(tmp_path)) == []
 
 
 def test_materialize_once_reraises_non_race_rename_failure(tmp_path, monkeypatch):
@@ -254,9 +190,9 @@ def test_materialize_once_reraises_non_race_rename_failure(tmp_path, monkeypatch
 
 
 def test_codebook_cache_key_includes_code_version(tmp_path, monkeypatch):
-    """r13 advice: the cross-process codebook cache key carries
-    CODEBOOK_VERSION (like IVF_INDEX_VERSION) so a change to the Lloyd
-    arithmetic can never silently read a stale pre-change artifact."""
+    """r13 advice: the codebook cache key carries CODEBOOK_VERSION (like
+    IVF_INDEX_VERSION) so a change to the Lloyd arithmetic can never
+    silently read a stale pre-change artifact."""
     import dend_covid19_spark.operators.kmeans as km
 
     p1 = km._codebook_scratch_path("/x", 1.0, [1, 2, 3])
