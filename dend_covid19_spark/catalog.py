@@ -215,7 +215,7 @@ def widen_scan(df: DataFrame) -> DataFrame:
     splits >= cores) the branch never fires, so nothing is shuffled at
     100 TB. Only for CPU-dense stages — byte-dense stages should keep
     their scan partitioning. Callers: operators/dedup._minhash_sigs and
-    _simhash_fps (each once per (sf, data mtime, pid) behind their
+    _simhash_fps (each once per (sf, data mtime) and process behind their
     write-once parquet scratch, so the ``df.rdd`` plan-conversion cost
     of the partition probe is paid once, not per query).
     """

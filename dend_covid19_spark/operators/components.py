@@ -43,7 +43,8 @@ from ..plans.registry import query
 # the same threshold discipline) as plans/graph.PR_BROADCAST_MAX_NODES:
 # below the gate each round is broadcast-hash joins with ZERO edge
 # exchange; above it the co-partitioned shuffle form runs instead, with
-# edges hash-partitioned once and stationary thereafter.
+# edges hash-partitioned once (stationary only with AQE off — see
+# connected_components).
 CC_BROADCAST_MAX_NODES = 50_000_000
 CC_SHUFFLE_PARTS = 32  # edge/label co-partitioning width, big branch
 
@@ -68,10 +69,18 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     exactly "no node changed" — one O(1) aggregate per round, half the
     actions of the changed-count form.
 
+    The self-looped edge table is checkpointed once, before round 0:
+    round 0, the gate count and every later round read that one
+    checkpoint, so the pair scan, distinct and union run once (the
+    entity-resolution graph: 32 -> 30 build jobs).
+
     Per-round plan is size-gated on node count: small graphs broadcast
     the label table onto the stationary checkpointed edges; big graphs
     fall back to edges hash-partitioned on the probe key once, labels
-    shuffling each round (the only side that must move)."""
+    shuffling each round. With AQE off the checkpoint keeps that hash
+    partitioning and the labels are the only side that moves; under
+    AQE, as get_spark configures it, the checkpoint reports
+    UnknownPartitioning and every round re-shuffles the edges too."""
     for field in edges.select(src, dst).schema:
         if not isinstance(field.dataType, IntegralType):
             raise TypeError(
@@ -85,7 +94,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     nodes = sym.select(F.col("a").alias("node")).distinct()
     sym = sym.unionByName(
         nodes.select(F.col("node").alias("a"), F.col("node").alias("b"))
-    )
+    ).localCheckpoint(eager=False)
     # round 0: min over N(v) + {v} of the identity labels is min(b)
     labels = (
         sym.groupBy("a")
@@ -99,11 +108,8 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
     ).collect()[0]
     small = init["n"] <= CC_BROADCAST_MAX_NODES
     cur_sum = init["s"]
-    sym = (
-        sym.localCheckpoint(eager=False)  # built once; never moves again
-        if small
-        else sym.repartition(CC_SHUFFLE_PARTS, "b").localCheckpoint(eager=False)
-    )
+    if not small:
+        sym = sym.repartition(CC_SHUFFLE_PARTS, "b").localCheckpoint(eager=False)
     # Terminates: labels are integers that never increase and are
     # bounded below by the smallest id, so the sum falls every round
     # until the fixpoint.
@@ -142,7 +148,8 @@ GROUP BY node
 
 def _dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, component) labels over the verified near-dup pairs,
-    materialized ONCE per (sf_dir, data mtime, pid) to parquet scratch —
+    materialized ONCE per (sf_dir, data mtime) to parquet scratch, per
+    process, under its scratch root —
     the same write-once discipline as dedup._minhash_sigs. Five
     registered rows consume the labels (components, cluster histogram,
     dup rate, corpus canonical apply, decontamination grouping); before

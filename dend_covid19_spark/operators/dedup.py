@@ -104,7 +104,8 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, shingles, sig) with everything computed by
     codegen'd higher-order functions (no UDF, no explode yet).
 
-    Materialized ONCE per (sf_dir, data mtime, pid) to parquet scratch
+    Materialized ONCE per (sf_dir, data mtime) to parquet scratch, per
+    process, under its scratch root,
     and shared by every caller: the signature table feeds three plan
     branches per query (banding + both sides of the candidate-pair
     join) and four registered queries. Until r10 this was an
@@ -1312,11 +1313,12 @@ LSH_SWEEP_CONFIGS = ((16, 2), (8, 4), (4, 8))
 # scalar count) and one in the recall audit; without reuse Spark
 # recomputes the whole rank/prefix/verify pipeline per branch (measured
 # 6.7s/run for the sweep vs ~2s persisted). Materialized ONCE to
-# parquet scratch keyed by (sf_dir, data mtime, pid) — same write-once
-# scoping as plans/cdc._snapshot_scratch — so it also survives the
-# spark.catalog.clearCache() the bench issues between isolated queries
-# (an executor-memory persist alone rebuilt 6.7s of truth per sweep in
-# the full-registry pass); subsequent calls are a tiny parquet scan.
+# parquet scratch keyed by (sf_dir, data mtime), per process under its
+# scratch root — same write-once scoping as plans/cdc._snapshot_scratch
+# — so it also survives the spark.catalog.clearCache() the bench issues
+# between isolated queries (an executor-memory persist alone rebuilt
+# 6.7s of truth per sweep in the full-registry pass); subsequent calls
+# are a tiny parquet scan.
 
 
 def _truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,7 +1643,8 @@ HAVING count(*) >= {WINNOW_MIN_SHARED}
 def _winnow_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, fp) distinct winnowing fingerprints.
 
-    Materialized once per (sf_dir, data mtime, pid) to parquet scratch —
+    Materialized once per (sf_dir, data mtime) to parquet scratch, per
+    process, under its scratch root —
     the _minhash_sigs discipline: the fingerprint table feeds THREE plan
     branches (the stop-fingerprint frequency aggregate and both sides of
     the pair join), and it is exactly the artifact a production clone

@@ -162,9 +162,10 @@ PR_ITERS = 5
 # is node-cardinality (16 bytes/row), so past ~5e7 nodes a broadcast
 # blows the executor/driver memory budget (the r5 judge's one "weak"
 # item). Below the gate we broadcast (zero exchange on the edge side);
-# above it we fall back to a sort-merge join against the STATIONARY
-# hash-partitioned edge table — edges still never move, the only
-# per-iteration exchange is the (much smaller) rank table itself.
+# above it we fall back to a sort-merge join against the hash-
+# partitioned edge table — with AQE off the edges never move and the
+# only per-iteration exchange is the (much smaller) rank table itself
+# (under AQE they re-shuffle; see _pagerank_ranks).
 PR_BROADCAST_MAX_NODES = 50_000_000
 PR_SHUFFLE_PARTS = 32  # edge/rank co-partitioning width for the big branch
 
@@ -178,12 +179,14 @@ def _pagerank_ranks(ed: DataFrame, deg: DataFrame, *, broadcast_ranks: bool) -> 
       edge partitions — zero edge-side exchange, right up to
       PR_BROADCAST_MAX_NODES.
     - broadcast_ranks=False: the 100 TB branch. Edges are hash-
-      partitioned on the source key ONCE and checkpointed (localCheckpoint
-      preserves the hash partitioning); each iteration repartitions only
-      the rank table to the same key, so the sort-merge join exchanges
-      node-cardinality rows per iteration while the edge side stays
-      stationary (pinned by tests/test_graph.py::
-      test_pagerank_shuffle_branch_edges_stationary).
+      partitioned on the source key ONCE and checkpointed; each
+      iteration repartitions only the rank table to the same key, so
+      with AQE off the checkpoint keeps its hash partitioning and the
+      sort-merge join exchanges node-cardinality rows per iteration
+      while the edge side stays stationary (pinned, AQE off, by
+      tests/test_graph.py::test_pagerank_shuffle_branch_edges_stationary).
+      Under AQE, as get_spark configures it, the checkpoint reports
+      UnknownPartitioning and every iteration re-shuffles the edges too.
     """
     if broadcast_ranks:
         ed = ed.localCheckpoint(eager=False)  # built once; edges never move
@@ -584,10 +587,14 @@ def _kcore_peel_shuffle(e: DataFrame) -> DataFrame:
 
     Scale: per-round exchanged volume is the dropped frontier plus its
     incident edges — summed over all rounds that is at most |V| + |E|,
-    against the filter formulation's per-round full edge rewrite. The
-    plan shape (frontier attach leaves the edge side exchange-free) is
-    pinned by tests/test_graph.py::
-    test_kcore_shuffle_branch_edges_stationary."""
+    against the filter formulation's per-round full edge rewrite. That
+    holds with AQE off, where the checkpoint keeps its hash
+    partitioning and the frontier attach leaves the edge side
+    exchange-free (pinned by tests/test_graph.py::
+    test_kcore_shuffle_branch_edges_stationary, which switches AQE
+    off). Under AQE, as get_spark configures it, the checkpoint
+    reports UnknownPartitioning and every round re-shuffles the edge
+    table as well."""
     e = e.repartition(KCORE_SHUFFLE_PARTS, "s").localCheckpoint(eager=False)
     alive = (
         e.groupBy("s")
@@ -718,38 +725,61 @@ def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     converges (oscillation is a property of the update rule, not of
     either engine).
 
-    Plan/scale: the edge list is hash-partitioned ONCE on ``d`` — the
-    per-round join key (``e.d == labels.node``) — and checkpointed, so
-    it is STATIONARY (the PageRank/k-core shape): each round only the
-    node-cardinality label table exchanges (repartitioned on ``node``
-    to attach to the stationary edge partitions as a co-partitioned
-    SMJ); the (node, label) count is one map-side-combined aggregate
-    over edge-cardinality messages, and the argmax is a hash max_by —
-    no unpartitioned window, no self-join. Partitioning on ``s`` here
-    would be useless: the join re-exchanges on ``d`` every round once
-    labels exceed the broadcast threshold (pinned by
-    test_lpa_edges_stationary). localCheckpoint truncates each round's
-    lineage. At 100 TB rounds are edge-linear, the same cost envelope
-    as one PageRank iteration."""
-    e = _kcore_edges(spark, sf_dir).repartition(KCORE_SHUFFLE_PARTS, "d").localCheckpoint(eager=False)
-    return _lpa_propagate(e).select(
+    Plan/scale: SIZE-GATED like pagerank_copurchase, on the node count
+    of the checkpointed round-0 label table (the way
+    connected_components reads its round-0 row). Below
+    KCORE_BROADCAST_MAX_NODES the node-cardinality label table
+    broadcasts onto the checkpointed edge partitions (``e.d ==
+    labels.node``), so no round exchanges the edge table (pinned by
+    test_lpa_broadcast_branch_edges_stationary). Above it the edge
+    list is hash-partitioned ONCE on ``d`` — the per-round join key —
+    and each round repartitions the label table on ``node`` to attach
+    as a co-partitioned SMJ. That co-partitioning holds only with AQE
+    off (test_lpa_edges_stationary switches it off): under AQE, as
+    get_spark configures it, the checkpoint reports UnknownPartitioning
+    and every round re-shuffles the edges too. The (node, label) count
+    is one map-side-combined aggregate over edge-cardinality messages
+    and the argmax a hash max_by — no unpartitioned window, no
+    self-join. localCheckpoint truncates each round's lineage. At
+    100 TB rounds are edge-linear, the same cost envelope as one
+    PageRank iteration. Both branches return the same rows
+    (test_lpa_gate_forced_shuffle_branch_identical)."""
+    e = _kcore_edges(spark, sf_dir)
+    labels = _lpa_identity_labels(e).localCheckpoint(eager=False)
+    small = labels.count() <= KCORE_BROADCAST_MAX_NODES
+    e = (
+        e.localCheckpoint(eager=False)  # built once; edges never move
+        if small
+        else e.repartition(KCORE_SHUFFLE_PARTS, "d").localCheckpoint(eager=False)
+    )
+    return _lpa_propagate(e, labels, broadcast_labels=small).select(
         F.col("node").alias("part_key"), F.col("label").cast("bigint").alias("community")
     )
 
 
-def _lpa_propagate(e: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
-    """LPA_ITERS synchronous label-propagation rounds over an edge table
-    already hash-partitioned on ``d`` and checkpointed (stationary).
-    Shared by graph_lpa_communities and the scaling probe's lpa_shape."""
-    labels = e.select(F.col("s").alias("node")).distinct().select(
+def _lpa_identity_labels(e: DataFrame) -> DataFrame:
+    """Round-0 labels: every source node labelled with itself."""
+    return e.select(F.col("s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
+
+
+def _lpa_propagate(
+    e: DataFrame, labels: DataFrame, *, broadcast_labels: bool, iters: int = LPA_ITERS
+) -> DataFrame:
+    """LPA_ITERS synchronous label-propagation rounds from ``labels`` over
+    a checkpointed edge table: the label table is broadcast onto it, or
+    (broadcast_labels=False) the edges come hash-partitioned on ``d``
+    and each round repartitions the labels on ``node``. Shared by
+    graph_lpa_communities and the scaling probe's lpa_shape."""
     for i in range(iters):
+        rhs = (
+            F.broadcast(labels)
+            if broadcast_labels
+            else labels.repartition(KCORE_SHUFFLE_PARTS, "node")
+        )
         cnt = (
-            e.join(
-                labels.repartition(KCORE_SHUFFLE_PARTS, "node"),
-                e.d == labels.node,
-            )
+            e.join(rhs, e.d == rhs.node)
             .groupBy("s", "label")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )

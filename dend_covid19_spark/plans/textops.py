@@ -885,7 +885,8 @@ SPAN_NGRAM = 4
 def _gram_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, i, gh): the 32-bit hash of the 4-gram starting at token
     position i (1-based), for every position of every document —
-    materialized ONCE per (sf_dir, data mtime, pid) to parquet scratch
+    materialized ONCE per (sf_dir, data mtime) to parquet scratch, per
+    process, under its scratch root
     (the _minhash_sigs discipline) and shared by dedup_ngram_spans and
     dedup_span_merge. Before r11 each consumer re-exploded and re-md5'd
     every position per call (~2-6 s at sf0.1); the position table is
@@ -974,8 +975,9 @@ def dedup_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram approximation first because it is one shuffle + one join.
     Output is docs with >= 1 duplicated position, with ppm coverage in
     exact integer arithmetic."""
-    # The gram-position table materializes once per (sf, mtime, pid)
-    # scratch (see _gram_positions) and is shared with dedup_span_merge;
+    # The gram-position table materializes once per (sf, mtime) scratch,
+    # per process under its scratch root (see _gram_positions), and is
+    # shared with dedup_span_merge;
     # at 100 TB this is the classic materialize-vs-recompute call —
     # |grams| ~ 10x corpus bytes, so production checkpoints the index to
     # cluster storage or recomputes if storage-starved; the md5 cost
@@ -1094,7 +1096,8 @@ def dedup_span_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries to the 4-gram grid."""
     from pyspark.sql import Window
 
-    # shared once-per-(sf, mtime, pid) gram index — see _gram_positions
+    # shared once-per-(sf, mtime) gram index, per process — see
+    # _gram_positions
     g = _gram_positions(spark, sf_dir)
     f = (
         g.groupBy("gh")

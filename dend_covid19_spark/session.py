@@ -66,6 +66,13 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10485760")
+        # Static conf: the compiled-class cache must hold one full pass of
+        # the iterative rows. A warm curation pass (PageRank, LPA, entity
+        # resolution, annotator) generates ~108 distinct whole-stage
+        # classes; at the default 100 entries each is evicted before its
+        # reuse and every pass recompiles all of them. At 1000 a warm
+        # pass recompiles none.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Reap dead processes' /tmp scratch before this one starts writing
     # its own (SURVEY.md §8 queue item c): side-effecting queries leave

@@ -526,19 +526,23 @@ def kcore_shuffle_shape(spark, k: int):
 
 
 def lpa_shape(spark, k: int):
-    """graph_lpa_communities' synchronous label propagation over k x the
-    co-purchase graph: edges hash-partitioned once on the join key (d)
-    and checkpointed; per round one co-partitioned label attach + one
+    """graph_lpa_communities' above-gate branch over k x the co-purchase
+    graph: edges hash-partitioned once on the join key (d) and
+    checkpointed; per round one co-partitioned label attach + one
     map-side-combined (node,label) count + a max_by hash argmax. The
     claimed edge-linear-per-round envelope, measured."""
-    from dend_covid19_spark.plans.graph import KCORE_SHUFFLE_PARTS, _lpa_propagate
+    from dend_covid19_spark.plans.graph import (
+        KCORE_SHUFFLE_PARTS,
+        _lpa_identity_labels,
+        _lpa_propagate,
+    )
 
     e = (
         _copurchase_edges(spark, k)
         .repartition(KCORE_SHUFFLE_PARTS, "d")
         .localCheckpoint()
     )
-    return _lpa_propagate(e)
+    return _lpa_propagate(e, _lpa_identity_labels(e), broadcast_labels=False)
 
 
 def funnel_shape(spark, k: int):

@@ -424,3 +424,65 @@ def test_lpa_communities_nontrivial(spark):
     sizes = Counter(labels)
     assert len(sizes) < len(nodes)
     assert max(sizes.values()) >= 2
+
+
+def test_lpa_broadcast_branch_edges_stationary(spark):
+    """LPA's sub-gate contract, under the session as configured (AQE
+    on), mirroring test_kcore_broadcast_branch_edges_stationary: each
+    round broadcasts the node-cardinality label table onto the
+    checkpointed edge partitions, so the join probes the edge table in
+    place — no shuffle Exchange of the edges below the join."""
+    from dend_covid19_spark.plans.graph import (
+        _kcore_edges,
+        _lpa_identity_labels,
+        _lpa_propagate,
+    )
+
+    e = _kcore_edges(spark, SF_DIR).localCheckpoint()
+    labels = _lpa_identity_labels(e).localCheckpoint()
+    one_round = _lpa_propagate(e, labels, broadcast_labels=True, iters=1)
+    plan = one_round._jdf.queryExecution().executedPlan().toString()
+    # The round's own (node, label) and argmax aggregates exchange ABOVE
+    # the join; the probe spine runs from the join down to the build
+    # side's BroadcastExchange. A shuffle of the edge table would
+    # surface there.
+    lines = plan.splitlines()
+    joins = [i for i, ln in enumerate(lines) if "BroadcastHashJoin" in ln]
+    assert joins, plan
+    join_at = joins[0]
+    first_bcast = next(
+        i for i, ln in enumerate(lines) if "BroadcastExchange" in ln
+    )
+    probe_spine = lines[join_at:first_bcast]
+    assert any("Scan ExistingRDD" in ln for ln in probe_spine), plan
+    shuffles = [
+        ln
+        for ln in probe_spine
+        if "Exchange" in ln and "Broadcast" not in ln
+    ]
+    assert not shuffles, plan
+
+
+def test_lpa_gate_forced_shuffle_branch_identical(spark, monkeypatch):
+    """With the node-count gate forced to 0, graph_lpa_communities runs
+    its above-gate branch (edges hash-partitioned on ``d``, labels
+    repartitioned every round) and must return exactly the rows of the
+    default broadcast branch at sf0.01 — the driver's scale. The
+    default branch is oracle-checked there, so this keeps the shuffle
+    branch oracle-checked without a registered twin row."""
+    import os
+
+    from dend_covid19_spark.plans import graph
+
+    sf01 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+    def rows():
+        return sorted(
+            (r.part_key, r.community)
+            for r in graph.graph_lpa_communities(spark, sf01).collect()
+        )
+
+    default = rows()
+    monkeypatch.setattr(graph, "KCORE_BROADCAST_MAX_NODES", 0)
+    forced = rows()
+    assert forced == default and default
