@@ -207,12 +207,6 @@ def _duck_kmeans_oracle() -> str:
 # hash-checks always recomputes from the codebook either way.
 _CODEBOOK_CACHE: dict[tuple, list] = {}
 
-# Code-version component of the cache key (r13 advice — mirrors
-# IVF_INDEX_VERSION): bump whenever the Lloyd arithmetic (_assign /
-# _update / the _MEAN6 rounding) changes, so a cached codebook from
-# before the change is never read.
-CODEBOOK_VERSION = 1
-
 
 def _codebook_scratch_path(sf_dir: str, mtime: float, seed_ids: list[int]) -> str:
     import hashlib
@@ -221,7 +215,7 @@ def _codebook_scratch_path(sf_dir: str, mtime: float, seed_ids: list[int]) -> st
     from ..scratch import scratch_dir
 
     token = hashlib.md5(
-        f"codebook{CODEBOOK_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
+        f"codebook:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{seed_ids}:{K}:{ITERS}".encode()
     ).hexdigest()[:12]
     # Per-process (r18 verdict item 3): a bench process must never read

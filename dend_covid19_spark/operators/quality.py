@@ -3,7 +3,7 @@
 The reference implements quality checks as post-load SQL + a Python
 ``raise`` (/root/reference/airflow/dags/tasks/tweets.py:136-142,
 market.py:45-52). Here they are engine-side predicates over DataFrames —
-usable in any pipeline and cheap at scale (``limit(1)`` short-circuits
+usable in any pipeline and cheap at scale (``isEmpty()`` short-circuits
 the scan; no full count)."""
 
 from __future__ import annotations
@@ -19,11 +19,11 @@ class DataQualityError(ValueError):
 def expect_nonempty(df: DataFrame, predicate: Column | None = None, name: str = "check") -> DataFrame:
     """Assert at least one row (optionally matching ``predicate``).
 
-    Uses limit(1).count() — Spark stops the scan at the first hit instead
-    of counting everything (the reference's SELECT-then-len does a full
-    fetch)."""
+    Uses ``isEmpty()``: one job that stops the scan at the first hit
+    instead of counting everything (the reference's SELECT-then-len does
+    a full fetch)."""
     checked = df.where(predicate) if predicate is not None else df
-    if checked.limit(1).count() < 1:
+    if checked.isEmpty():
         raise DataQualityError(f"quality gate {name!r}: expected >=1 row, got 0")
     return df
 
@@ -33,7 +33,7 @@ def expect_unique_key(df: DataFrame, *key_cols: str, name: str = "pk") -> DataFr
     Redshift DDL, create_tables.sql:3,16 — Spark doesn't enforce PKs, so
     the engine checks it explicitly). One aggregation, short-circuited."""
     dupes = df.groupBy(*key_cols).count().where("count > 1")
-    if dupes.limit(1).count() > 0:
+    if not dupes.isEmpty():
         raise DataQualityError(f"quality gate {name!r}: duplicate keys in {key_cols}")
     return df
 
@@ -41,7 +41,7 @@ def expect_unique_key(df: DataFrame, *key_cols: str, name: str = "pk") -> DataFr
 def expect_no_nulls(df: DataFrame, *cols: str, name: str = "not_null") -> DataFrame:
     """Assert NOT NULL columns (create_tables.sql:4,17 equivalents)."""
     for c in cols:
-        if df.where(df[c].isNull()).limit(1).count() > 0:
+        if not df.where(df[c].isNull()).isEmpty():
             raise DataQualityError(f"quality gate {name!r}: NULLs in column {c!r}")
     return df
 
@@ -59,7 +59,8 @@ def observe_metrics(df: DataFrame, *metrics: Column):
     At 100 TB this is the right gate shape: the expect_* family costs
     an extra (short-circuited) job per assertion, while an observe
     piggybacks the metric on the write itself — one pass, telemetry
-    included. Streams surface the same metrics per-batch through
+    included. ``pipeline.run_daily`` gates both serving-table appends
+    this way. Streams surface the same metrics per-batch through
     QueryProgressEvent.observedMetrics."""
     from pyspark.sql import Observation
 

@@ -970,7 +970,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ~nprobe/k of the files and never touches the rest.
 # tests/test_round13_ops.py pins PartitionFilters in the executed plan
 # and that the probed set is a strict subset of the k cells.
-IVF_INDEX_VERSION = 1  # bump to invalidate the scratch layout
 
 # The index layout's schema, pinned for readers: passing it explicitly
 # skips the per-process footer-inference job a bare read.parquet pays on
@@ -1003,7 +1002,7 @@ def _ivf_cell_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> 
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
     token = hashlib.md5(
-        f"ivfcell{IVF_INDEX_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
+        f"ivfcell:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{SEMDEDUP_SEED_IDS}:{K}:{ITERS}".encode()
     ).hexdigest()[:12]
     # Per-process (r18 verdict item 3): each process builds its own
@@ -1179,7 +1178,7 @@ def _ivf_delta_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) ->
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
     token = hashlib.md5(
-        f"ivfdelta{IVF_INDEX_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
+        f"ivfdelta:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{SEMDEDUP_SEED_IDS}:{K}:{ITERS}:{DELTA_MOD}:{DELTA_REM}".encode()
     ).hexdigest()[:12]
     # per-process build — see _ivf_cell_index_path (r18).
@@ -1349,7 +1348,6 @@ def ann_ivf_delta_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every probe's values are invariant by construction (the rewrite
 # re-packs whole files, no arithmetic anywhere near the data).
 COMPACT_QUERY_VEC_ID = 13  # delta-slice query (13 % DELTA_MOD == DELTA_REM)
-IVF_COMPACT_VERSION = 1  # bump when the compaction staging changes
 
 
 def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str, cents_rows: list) -> str:
@@ -1373,8 +1371,7 @@ def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str, cents_rows: list
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "embeddings.parquet"))
     token = hashlib.md5(
-        f"ivfcompact{IVF_INDEX_VERSION}.{IVF_COMPACT_VERSION}:"
-        f"{os.path.abspath(sf_dir)}:{mtime}:{SEMDEDUP_SEED_IDS}:{K}:{ITERS}:"
+        f"ivfcompact:{os.path.abspath(sf_dir)}:{mtime}:{SEMDEDUP_SEED_IDS}:{K}:{ITERS}:"
         f"{DELTA_MOD}:{DELTA_REM}".encode()
     ).hexdigest()[:12]
     # per-process build — see _ivf_cell_index_path (r18).

@@ -8,23 +8,34 @@ tables; post-load SELECT gates -> operators/quality.py.
 Differences from the reference, by design (SURVEY.md §3.1 'new-engine
 shape'):
   - one lazy plan per side, ending in a write: no collect-then-pivot
-    round-trip (tweets.py:64-77), pivot is native with a fixed class
-    list (and absent classes coalesce to 0 instead of KeyError);
+    round-trip (tweets.py:64-77); the histogram is one global aggregate
+    over a fixed class list (absent classes count 0 instead of KeyError);
   - the market side fetches all series then performs a single batched
     write (vs one INSERT per index, market.py:29-42);
-  - quality gates short-circuit (limit(1)) instead of full fetches.
+  - the two sides run concurrently, as the reference DAG fans them out
+    (tweets_and_market.py:97-104), and each side's quality gate reads
+    counts observed during its own write instead of re-scanning the
+    serving table (the table is scanned only when the write held no
+    matching row).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .functions.annotator import annotate_sentiment
-from .operators.quality import expect_nonempty
+from .operators.quality import (
+    DataQualityError,
+    expect_nonempty,
+    expect_observed,
+    observe_metrics,
+)
 from .sources.ddl import reset_serving_tables
 from .sources.readers import external_timeseries
 
@@ -35,7 +46,8 @@ def extract_sentiment(
     spark: SparkSession, sf_dir: str, date: str, language: str = "en"
 ) -> DataFrame:
     """The reference's Spark job (tweets.py:41-82) as ONE lazy plan:
-    filter -> annotate -> histogram -> native pivot -> enriched one-row
+    filter -> annotate -> one-row class histogram (a ``count_if`` per
+    class; values outside the class list are not counted) -> enriched
     summary for ``date``.
 
     documents stand in for the day's tweet shards; ``date`` plays the
@@ -47,24 +59,19 @@ def extract_sentiment(
     )
     annotated = annotate_sentiment(filtered)
     d = F.to_date(F.lit(date))
-    return (
-        annotated.groupBy()
-        .pivot("overall_sentiment", list(SENTIMENT_CLASSES))
-        .count()
-        .select(
-            F.format_string("%s(%s)", F.lit(date), F.lit(language)).alias(
-                "tweets_sentiment_id"
-            ),
-            d.cast("timestamp").alias("date"),
-            F.year(d).cast("short").alias("year"),
-            F.month(d).cast("short").alias("month"),
-            F.dayofmonth(d).cast("short").alias("day"),
-            F.lit(language).alias("language"),
-            *[
-                F.coalesce(F.col(c), F.lit(0)).cast("int").alias(f"{c}_count")
-                for c in SENTIMENT_CLASSES
-            ],
-        )
+    return annotated.agg(
+        F.format_string("%s(%s)", F.lit(date), F.lit(language)).alias(
+            "tweets_sentiment_id"
+        ),
+        d.cast("timestamp").alias("date"),
+        F.year(d).cast("short").alias("year"),
+        F.month(d).cast("short").alias("month"),
+        F.dayofmonth(d).cast("short").alias("day"),
+        F.lit(language).alias("language"),
+        *[
+            F.count_if(F.col("overall_sentiment") == c).cast("int").alias(f"{c}_count")
+            for c in SENTIMENT_CLASSES
+        ],
     )
 
 
@@ -95,6 +102,27 @@ def scrap_market_data(
     )
 
 
+def _append_gated(
+    spark: SparkSession, df: DataFrame, table: str, gates: dict[str, Column]
+) -> None:
+    """Append ``df`` to ``table``, then assert each gate (name ->
+    predicate) matched >=1 row. The matching rows are counted during
+    the write itself (``observe_metrics``): an append only adds rows, so
+    a write that held a match proves the table holds one, with no extra
+    job. Only a gate whose count is 0 scans the table, which keeps a
+    re-run of a date whose fetch came back empty passing on the rows an
+    earlier run committed."""
+    observed, obs = observe_metrics(
+        df, *[F.count_if(pred).alias(name) for name, pred in gates.items()]
+    )
+    observed.write.mode("append").insertInto(table)
+    for name, pred in gates.items():
+        try:
+            expect_observed(obs, lambda m, name=name: m[name] > 0, name=name)
+        except DataQualityError:
+            expect_nonempty(spark.table(table), pred, name=name)
+
+
 def run_daily(
     spark: SparkSession,
     sf_dir: str,
@@ -105,28 +133,43 @@ def run_daily(
     db_prefix: str = "",
 ) -> None:
     """One execution-date run of the whole DAG (tweets_and_market.py:97-104):
-    both extract sides, both loads, both quality gates. Ordering mirrors
-    the reference's fan-out/fan-in; Spark's lazy DAG handles everything
-    within each side. ``db_prefix`` (e.g. ``"mydb."``) redirects the
-    serving tables into an alternate database — the warehouse-relocation
-    knob the roundtrip query uses to stay cwd-independent."""
-    sentiment = extract_sentiment(spark, sf_dir, date, language)
-    sentiment.write.mode("append").insertInto(f"{db_prefix}tweets_sentiment")
-    market = scrap_market_data(spark, fetch, indices, date)
-    market.write.mode("append").insertInto(f"{db_prefix}markets_value")
-
+    the tweets side (extract -> append -> gate) and the market side
+    (fetch -> append -> gate) run concurrently on two driver threads, the
+    reference's fan-out, and the call returns once both have finished,
+    its fan-in. Both threads inherit the caller's job group, description
+    and tags, so every job a day launches is traced to the caller's.
+    When both sides fail, the tweets side's error is raised. Spark's
+    lazy DAG handles everything within each side. ``db_prefix`` (e.g.
+    ``"mydb."``) redirects the serving tables into an alternate database
+    — the warehouse-relocation knob the roundtrip query uses to stay
+    cwd-independent."""
+    indices = tuple(indices)
     d = F.to_date(F.lit(date)).cast("timestamp")
-    expect_nonempty(
-        spark.table(f"{db_prefix}tweets_sentiment"),
-        F.col("date") == d,
-        name=f"tweets@{date}",
-    )
-    for index in indices:
-        expect_nonempty(
-            spark.table(f"{db_prefix}markets_value"),
-            (F.col("date") == d) & (F.col("index") == index),
-            name=f"market@{date}/{index}",
+
+    def tweets_side() -> None:
+        _append_gated(
+            spark,
+            extract_sentiment(spark, sf_dir, date, language),
+            f"{db_prefix}tweets_sentiment",
+            {f"tweets@{date}": F.col("date") == d},
         )
+
+    def market_side() -> None:
+        _append_gated(
+            spark,
+            scrap_market_data(spark, fetch, indices, date),
+            f"{db_prefix}markets_value",
+            {
+                f"market@{date}/{index}": (F.col("date") == d) & (F.col("index") == index)
+                for index in indices
+            },
+        )
+
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        sides = [pool.submit(inherit(side)) for side in (tweets_side, market_side)]
+    for side in sides:
+        side.result()
 
 
 def backfill(

@@ -2240,10 +2240,6 @@ def lakehouse_manifest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compacts (its daily output is ~1 row, tweets.py:81-82); any engine
 # serving its ingest pattern at scale compacts daily.
 
-# bump whenever the staging/compaction arithmetic changes (the r14
-# CODEBOOK_VERSION discipline): the scratch key must never serve a
-# pre-change artifact to post-change code
-_COMPACT_DEMO_VERSION = 2
 _COMPACT_FRAG_FILES = 6  # debris width staged for the fragmented dates
 _COMPACT_FRAG_DOM = 10  # day-of-month <= this -> staged fragmented
 _COMPACT_MAX_FILES = 3  # breach rule: compact partitions with more files
@@ -2272,7 +2268,7 @@ def _compacted_events_path(spark: SparkSession, sf_dir: str) -> str:
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(
-        f"compactev{_COMPACT_DEMO_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
+        f"compactev:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{_COMPACT_FRAG_FILES}:{_COMPACT_FRAG_DOM}:{_COMPACT_MAX_FILES}".encode()
     ).hexdigest()[:12]
     # per-process build (r18 verdict item 3): each process builds its
@@ -2346,7 +2342,7 @@ def _manifest_compacted_events_root(spark: SparkSession, sf_dir: str) -> str:
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "events.parquet"))
     token = hashlib.md5(
-        f"mcompactev{_COMPACT_DEMO_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
+        f"mcompactev:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{_COMPACT_FRAG_FILES}:{_COMPACT_FRAG_DOM}".encode()
     ).hexdigest()[:12]
     # per-process build (r18 verdict item 3): each process builds its

@@ -312,13 +312,6 @@ DECON_NGRAM = 5
 DECON_MOD = 11
 
 
-# Code-version component of the decon scratch key
-# (mirrors IVF_INDEX_VERSION / CODEBOOK_VERSION): bump when the
-# tokenize/shingle/hash derivation OR the bloom packing changes, so a
-# new process never reads a stale pre-change artifact.
-DECON_CACHE_VERSION = 1
-
-
 def _decon_scratch_parent(sf_dir: str) -> str:
     """Per-process (sf, mtime)-keyed parent dir for the decon
     contamination index — the shingle-hash table and the packed bloom
@@ -339,7 +332,7 @@ def _decon_scratch_parent(sf_dir: str) -> str:
 
     mtime = os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
     token = hashlib.md5(
-        f"decon{DECON_CACHE_VERSION}:{os.path.abspath(sf_dir)}:{mtime}:"
+        f"decon:{os.path.abspath(sf_dir)}:{mtime}:"
         f"{DECON_NGRAM}".encode()
     ).hexdigest()[:12]
     return scratch_dir(f"deconsh_{token}")

@@ -86,6 +86,63 @@ def test_quality_gates(warehouse):
         expect_unique_key(dup, "tweets_sentiment_id", name="dup-pk")
 
 
+def _no_points(index: str, date: str) -> list:
+    """A connector that has nothing for the date."""
+    return []
+
+
+def _connector_down(index: str, date: str) -> list:
+    raise ConnectionError("market API down")
+
+
+def test_empty_market_fetch_fails_gate_then_table_fallback(warehouse):
+    """An empty fetch for a new date fails the market gate by name; once
+    an earlier run has committed rows for that date, a re-run with an
+    empty fetch passes on them (the gate falls back to the table)."""
+    spark = warehouse
+    date, index = "2020-02-01", "NASDAQOMX/XQC"
+    with pytest.raises(DataQualityError, match=f"market@{date}/{index}"):
+        run_daily(spark, SF_DIR, date, _no_points, indices=(index,))
+    run_daily(spark, SF_DIR, date, fake_quandl, indices=(index,))
+    run_daily(spark, SF_DIR, date, _no_points, indices=(index,))
+    mv = spark.table("markets_value").where(f"markets_value_id = '{date}({index})'")
+    assert mv.count() == 1
+
+
+def test_market_fetch_error_propagates_after_tweets_commit(warehouse):
+    """A connector that raises fails the day, and the call returns only
+    after the concurrent tweets side has committed its row."""
+    spark = warehouse
+    date = "2020-02-02"
+    with pytest.raises(ConnectionError, match="market API down"):
+        run_daily(spark, SF_DIR, date, _connector_down)
+    ts = spark.table("tweets_sentiment").where(f"tweets_sentiment_id = '{date}(en)'")
+    assert ts.count() == 1
+
+
+def test_both_sides_failing_raises_the_tweets_error(warehouse, tmp_path):
+    """With no documents to read and a connector that raises, the day
+    fails with the tweets side's error, not the market side's."""
+    with pytest.raises(Exception) as err:
+        run_daily(warehouse, str(tmp_path / "missing"), "2020-02-03", _connector_down)
+    assert not isinstance(err.value, ConnectionError)
+
+
+def test_run_daily_jobs_stay_in_callers_job_group(warehouse):
+    """Both sides inherit the caller's job group, and the gates read the
+    counts observed during the writes: a day is the sentiment write's 2
+    jobs plus the market write's 1, with no gate scans."""
+    spark = warehouse
+    sc = spark.sparkContext
+    sc.setJobGroup("run_daily_jobs", "one execution date")
+    try:
+        run_daily(spark, SF_DIR, "2020-02-04", fake_quandl)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("run_daily_jobs")) == 3
+
+
 def test_incremental_daily_counts_matches_full(spark):
     """Folding the last day into the aggregate of all earlier days must
     equal the full-recompute aggregate exactly (algebraic re-aggregation

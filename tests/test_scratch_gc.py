@@ -187,15 +187,3 @@ def test_materialize_once_reraises_non_race_rename_failure(tmp_path, monkeypatch
     assert os.path.exists(os.path.join(target, "_SUCCESS"))
     leftovers = [p for p in os.listdir(tmp_path) if ".tmp." in p]
     assert leftovers == []
-
-
-def test_codebook_cache_key_includes_code_version(tmp_path, monkeypatch):
-    """r13 advice: the codebook cache key carries CODEBOOK_VERSION (like
-    IVF_INDEX_VERSION) so a change to the Lloyd arithmetic can never
-    silently read a stale pre-change artifact."""
-    import dend_covid19_spark.operators.kmeans as km
-
-    p1 = km._codebook_scratch_path("/x", 1.0, [1, 2, 3])
-    monkeypatch.setattr(km, "CODEBOOK_VERSION", km.CODEBOOK_VERSION + 1)
-    p2 = km._codebook_scratch_path("/x", 1.0, [1, 2, 3])
-    assert p1 != p2
